@@ -682,10 +682,11 @@ object ScaleProbe {
       // stays two pair-graph-sized joins
       if (wanted("split_leakage"))
         time(spark, copies, "split_leakage")(Dedup.splitLeakageOn(docs))
-      // BPE: the corpus term is ONE explode + word count; every round is
-      // vocab-sized (replica tagging multiplies vocab ×copies, still
-      // ≪ corpus). Encode adds one broadcast join over the re-exploded
-      // corpus — the linear term under test
+      // BPE: the corpus term is ONE explode + word count; the collected
+      // word table is vocab-sized (replica tagging multiplies vocab
+      // ×copies, ~10³ rows at 100×, still ≪ corpus) and every round runs
+      // in memory over it. Encode adds one broadcast join over the
+      // re-exploded corpus — the linear term under test
       if (wanted("bpe_merges"))
         time(spark, copies, "bpe_merges")(
           graft.analytics.BpeTrainer.bpeMergesOn(docs, 8))

@@ -4,34 +4,40 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Distributed BPE tokenizer training over the `documents` table — the
-  * merge-rule learning step an LLM pipeline runs before tokenizing its
-  * corpus. The algorithm is the standard one (Sennrich et al.; what HF
-  * tokenizers implements): ONE corpus pass builds the word-frequency
-  * table, then every merge round runs on that vocabulary-sized table —
-  * adjacent-symbol pair counts weighted by word frequency, merge the
-  * argmax pair, re-segment. The corpus-sized work is a single token
-  * count; the k iterative rounds touch only |vocab| rows each.
+import java.nio.charset.StandardCharsets
+import scala.collection.mutable
+
+/** BPE tokenizer training over the `documents` table — the merge-rule
+  * learning step an LLM pipeline runs before tokenizing its corpus. The
+  * algorithm is the standard one (Sennrich et al.; what HF tokenizers
+  * implements): ONE corpus pass builds the word-frequency table, then
+  * every merge round runs on that vocabulary-sized table — adjacent-symbol
+  * pair counts weighted by word frequency, merge the argmax pair,
+  * re-segment. The corpus pass is a Spark explode + word-keyed count; the
+  * word-count table is collected once and the k rounds run in memory
+  * over it, like the HF trainer over its word-count dict.
   *
   * Representation: a word's segmentation is the separator-joined symbol
-  * string `⊥s₁⊥s₂⊥…⊥` (boundary separators included), so "merge (a,b)"
-  * is the string replace `⊥a⊥b⊥ → ⊥ab⊥` — leftmost non-overlapping,
-  * exactly BPE's scan order, with the boundary separators preventing
-  * any cross-symbol substring match. Both engines' `replace` share
-  * those semantics, which is what makes the op oracle-checkable: the
-  * DuckDB oracle is the same k rounds mechanically unrolled into CTEs.
+  * string `⊥s₁⊥s₂⊥…⊥` (boundary separators included; symbols are code
+  * points), so "merge (a,b)" is the string replace `⊥a⊥b⊥ → ⊥ab⊥` —
+  * leftmost non-overlapping, with the boundary separators preventing any
+  * cross-symbol substring match. Java's `String.replace` and DuckDB's
+  * `replace` share those semantics, which is what makes the op
+  * oracle-checkable: the DuckDB oracle is the same k rounds mechanically
+  * unrolled into CTEs, and the in-memory rounds follow it step for step
+  * (the empty word is `⊥⊥`: one empty symbol, no pairs, one token).
   *
   * Determinism: pair counts are integer word-frequency sums; ties on
-  * the argmax break on (count desc, left asc, right asc) — bytewise
-  * string order in both engines.
+  * the argmax break on (count desc, left asc, right asc) with strings in
+  * UTF-8 byte order — DuckDB's order, not `String.compareTo`'s UTF-16.
+  * If no word has two symbols left, training stops early with fewer than
+  * k merges.
   *
   * Scale (100 TB): the corpus pass is one explode + word-keyed count;
-  * each round is a vocab-sized groupBy plus a 1-row argmax read — the
-  * per-round driver `head` is k rows of control plane total, the same
-  * class as dedup_components' convergence counts. Vocabulary tables are
-  * ~10⁶–10⁷ rows at web scale — a few executor partitions; the rounds
-  * are seconds each regardless of corpus size, which is exactly why
-  * production BPE trainers work off the word-count dict.
+  * the collecting process then holds the vocabulary, not the corpus
+  * (~10³ rows at the 100× probe; ~10⁶–10⁷ at web scale, the table
+  * [[bpeEncode]] broadcasts anyway). Each round is one pass over that
+  * table, so the rounds cost no Spark jobs and no per-round scheduling.
   */
 object BpeTrainer {
 
@@ -49,56 +55,68 @@ object BpeTrainer {
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =
     bpeMergesOn(Tables.documents(spark, dir), Merges)
 
+  /** UTF-8 byte order (= code-point order), the order both engines sort
+    * strings in; `String.compareTo` is UTF-16 order and differs from it
+    * for supplementary characters against U+E000–U+FFFF.
+    */
+  private val Utf8Order: Ordering[String] = (x, y) =>
+    java.util.Arrays.compareUnsigned(
+      x.getBytes(StandardCharsets.UTF_8), y.getBytes(StandardCharsets.UTF_8))
+
+  /** Argmax order over (count, left, right): count desc, then left and
+    * right ascending.
+    */
+  private val PairOrder: Ordering[(Long, String, String)] =
+    Ordering.Tuple3(Ordering.Long.reverse, Utf8Order, Utf8Order)
+
+  /** The symbols of a segmentation `⊥s₁⊥…⊥sₙ⊥` (`⊥⊥` → one empty symbol). */
+  private def symbols(w: String): Array[String] =
+    w.substring(1, w.length - 1).split(Sep, -1)
+
   /** Runs the k training rounds; returns the merge table and the final
     * per-word segmentation frame (word, w, cnt) — the trained tokenizer's
     * word table, reused by [[bpeEncode]].
     */
   private def train(docs: DataFrame, k: Int)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
-    // one corpus pass: word-frequency table, then char-split to the
-    // sep-joined symbol representation
+    val spark = docs.sparkSession
+    import spark.implicits._
+    // the one corpus pass: the word-frequency table, collected
     var words = docs
       .select(explode(split(col("text"), " ")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .select(col("word"),
-        concat(lit(Sep),
-          array_join(expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"), Sep),
-          lit(Sep)).as("w"),
-        col("cnt"))
-      .localCheckpoint(eager = false)
+      .collect()
+      .map { r =>
+        val word = r.getString(0)
+        val syms = word.codePoints.toArray.map(Character.toString(_))
+        (word, syms.mkString(Sep, Sep, Sep), r.getLong(1))
+      }
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     for (rank <- 1 to k) {
-      val syms = split(col("w"), Sep)
-      val best = words
-        .select(slice(syms, lit(2), size(syms) - 2).as("s"), col("cnt"))
-        // single-symbol words contribute no pairs (Spark's sequence(1, 0)
-        // would COUNT DOWN; DuckDB's generate_series(1, 0) is empty)
-        .filter(size(col("s")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(1, size(s) - 1), i -> struct(element_at(s, i) AS a, element_at(s, i + 1) AS b))"))
-          .as("p"), col("cnt"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("cnt")).as("n"))
-        .orderBy(col("n").desc, col("a").asc, col("b").asc)
-        .head()
-      val (a, b, n) = (best.getString(0), best.getString(1), best.getLong(2))
-      merges += ((rank, a, b, a + b, n))
-      words = words
-        .select(col("word"),
-          call_function("replace", col("w"),
-            lit(Sep + a + Sep + b + Sep), lit(Sep + a + b + Sep)).as("w"),
-          col("cnt"))
-        .localCheckpoint(eager = false)
+      val pairs = mutable.HashMap.empty[(String, String), Long]
+      for ((_, w, cnt) <- words) {
+        val s = symbols(w)
+        for (i <- 0 until s.length - 1)
+          pairs((s(i), s(i + 1))) = pairs.getOrElse((s(i), s(i + 1)), 0L) + cnt
+      }
+      // no pair left: this round and every later one learn nothing
+      pairs.iterator.map { case ((a, b), n) => (n, a, b) }.minOption(PairOrder)
+        .foreach { case (n, a, b) =>
+          merges += ((rank, a, b, a + b, n))
+          val (from, to) = (Sep + a + Sep + b + Sep, Sep + a + b + Sep)
+          words = words.map { case (word, w, cnt) => (word, w.replace(from, to), cnt) }
+        }
     }
-    (merges.result(), words)
+    (merges.result(), words.toSeq.toDF("word", "w", "cnt"))
   }
 
   private[graft] def bpeMergesOn(docs: DataFrame, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
+    // a local frame, built in rank order: sorting it again would only
+    // add Spark jobs
     train(docs, k)._1
       .toDF("rank", "left", "right", "merged", "pair_count")
-      .orderBy("rank")
   }
 
   // ---- bpe_encode: per-doc token counts under the trained tokenizer ----

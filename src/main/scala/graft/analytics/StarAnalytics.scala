@@ -1025,16 +1025,23 @@ object StarAnalytics {
     * their base stores (`knnServedLive` / `hybridRrfLive`), but the
     * warehouse tier's served entry read a landed store only, so an
     * in-flight month of dimension changes was invisible until ingest.
-    * Here the base store holds every calendar month EXCEPT the last;
-    * the last month rides [[graft.streaming.Scd2Ingest.liveCurrent]] as
-    * the in-flight delta — merged at READ time through the ingest
-    * tier's own `mergedRows` (one definition, so composed-at-read ≡
-    * landed is structural), never written.
+    *
+    * Dispatch on the dimension's calendar months:
+    *  - more than one month: the base store holds every calendar month
+    *    EXCEPT the last; the last month rides
+    *    [[graft.streaming.Scd2Ingest.liveCurrent]] as the in-flight delta
+    *    — merged at READ time through the ingest tier's own `mergedRows`
+    *    (one definition, so composed-at-read ≡ landed is structural),
+    *    never written ([[scd2LookupLiveCompose]]);
+    *  - at most one month (the registry corpora): the landed base would
+    *    be empty, so the entry runs the in-plan rebuild [[scd2LookupOn]]
+    *    and builds or reads no store.
     *
     * Bit-exactness: `Scd2LiveSpec` pins liveCurrent(prefix store,
     * remainder delta) ≡ the batch rebuild over all events for EVERY
-    * prefix split, so this entry equals [[scd2Lookup]] frame-for-frame
-    * and shares its oracle verbatim.
+    * prefix split, and the compose arm ≡ the rebuild arm on the registry
+    * corpus, so this entry equals [[scd2Lookup]] frame-for-frame and
+    * shares its oracle verbatim.
     *
     * Scale (100 TB): the read-time composition costs the delta's merge
     * — O(users touched this month), the ingest bound — on top of the

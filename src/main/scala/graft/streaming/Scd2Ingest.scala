@@ -141,7 +141,8 @@ object Scd2Ingest {
 
   /** The live dimension table: latest generation per interval key, with
     * is_current derived — column-compatible with the batch
-    * `scd2_intervals` entry.
+    * `scd2_intervals` entry. Rows come in no particular order (no
+    * (user_id, version) order either): sort them if order matters.
     */
   def current(spark: SparkSession, store: Scd2Store): DataFrame =
     resolve(spark.read.parquet(store.intervalsPath))
@@ -164,6 +165,8 @@ object Scd2Ingest {
     * its landed self would, so the law is structural: liveCurrent(store,
     * delta) ≡ current(store after processBatch(delta)) ≡ the batch
     * rebuild over all events (`Scd2LiveSpec`, any prefix split).
+    *
+    * Rows come in no particular order, as in [[current]].
     *
     * Scale: the composition adds ZERO store mutation and the delta's
     * merge cost — O(touched users), the ingest tier's own bound; the

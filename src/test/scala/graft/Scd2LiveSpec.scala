@@ -81,9 +81,16 @@ class Scd2LiveSpec extends SparkSpec {
       .distinct().orderBy("m").collect().map(_.get(0))
     assert(months.length <= 1,
       "registry corpus should dispatch to the rebuild — refresh this law if not")
-    val composed = StarAnalytics.scd2LookupLiveCompose(spark,
-      graft.analytics.RetrievalAnalytics.storeKey(dir) + "_livedispatchspec",
-      ev, dimEvents, months).collect().map(_.toString).toSeq
+    // a fresh store per run: the store is memoized by key, and a key
+    // naming the corpus path would serve a stale store if the corpus
+    // under that path changed
+    val key = "livedispatchspec_" + java.util.UUID.randomUUID()
+    val root = new org.apache.hadoop.fs.Path(
+      graft.sources.StoreCatalog.root("graft_scd2_store", key))
+    val composed = try {
+      StarAnalytics.scd2LookupLiveCompose(spark, key, ev, dimEvents, months)
+        .collect().map(_.toString).toSeq
+    } finally root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
     val rebuilt = StarAnalytics.scd2LookupOn(ev)
       .collect().map(_.toString).toSeq
     assert(composed.nonEmpty && composed == rebuilt)
