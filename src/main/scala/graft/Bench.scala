@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line (also written to SPARK_GRAFT_BENCH_OUT, default
   * `bench_out.json`, so harnesses never have to scrape it out of sbt log
@@ -38,24 +36,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Constraint inference wraps heavy HOF join keys (minhash/simhash
-      // folds) in inferred isnotnull filters that get pushed into the
-      // scan — recomputing the fold 2-3x per row. The inferred filters
-      // save nothing on this workload.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Maintenance.quietKnownWarnSpam()
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // JVM + codegen + parquet-footer warmup: run EVERY query once on the
     // tiniest SF so per-query timings measure the query, not first-use

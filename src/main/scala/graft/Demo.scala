@@ -2,7 +2,6 @@ package graft
 
 import graft.sources.{TickGenerator, TickStore}
 import graft.streaming.{IncrementalBars, IngestPipeline, KafkaIO}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -19,16 +18,7 @@ import java.sql.Timestamp
 object Demo {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse(Files.createTempDirectory("graft-demo").toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Maintenance.quietKnownWarnSpam()
+    val spark = GraftSession(8, sys.env.get("SPARK_MASTER"))
 
     // 1. producer → wire → consumer (S1, S4-S8)
     val wire   = KafkaIO.encodeTicks(TickGenerator.batch(spark, 50000))

@@ -34,6 +34,21 @@ object Maintenance {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = blocking))
 
+  /** Run `body`, then release exactly the RDDs persisted (cached or
+    * localCheckpointed) while it ran, leaving any other pipeline's blocks
+    * alone. The streaming `foreachBatch` bodies wrap each micro-batch in
+    * it: their lazily checkpointed intermediates would otherwise pile up
+    * batch after batch in a long-running query.
+    */
+  def releasingNewBlocks[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    try body
+    finally sc.getPersistentRDDs
+      .filterNot { case (id, _) => before.contains(id) }
+      .values.foreach(_.unpersist(blocking = false))
+  }
+
   /** Silence two known-benign WARN firehoses so the mains' stderr keeps
     * signal (r18 verdict #7): every [[releaseCachedBlocks]] sweep logs
     * one `MapPartitionsRDD ... locally checkpointed, its lineage has

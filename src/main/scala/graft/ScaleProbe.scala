@@ -203,18 +203,7 @@ object ScaleProbe {
     def wanted(op: String): Boolean = opSel.contains("all") || opSel.contains(op)
     val sfDir  = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val tmp    = if (args.length > 3) args(3) else "/tmp/scale_probe"
-    val spark = SparkSession.builder().master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Maintenance.quietKnownWarnSpam()
+    val spark = GraftSession(Runtime.getRuntime.availableProcessors())
 
     scales.foreach { copies =>
       val docsPath = s"$tmp/docs_$copies"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,28 +7,17 @@ object Verify {
     val sfDir  = args(0)
     val outDir = args(1)
     // optional third arg: comma-separated query-name filter (dev use;
-    // the driver always passes exactly two args)
+    // two args dump every key). An unknown name fails before the session
+    // starts.
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      else None
+    only.foreach { names =>
+      val unknown = names.diff(SparkEntry.queries.keySet)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    }
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores TIMESTAMP(NANOS); read as Long, normalized
-      // to µs in Tables.events (matches DuckDB's ns→µs truncation).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Bench.scala: inferred isnotnull on heavy HOF join keys would
-      // recompute minhash/simhash folds inside the scan filter
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Maintenance.quietKnownWarnSpam()
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

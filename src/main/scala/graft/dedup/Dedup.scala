@@ -568,8 +568,9 @@ object Dedup {
     * spends more time in the optimizer than in execution). Because the
     * lineage is truncated, the previous round's blocks are provably
     * unreferenced and are released immediately (snapshot-diff of
-    * getPersistentRDDs, the CorpusIngest pattern); the edge list stays
-    * persisted across rounds. Standard localCheckpoint caveat applies:
+    * getPersistentRDDs, as in [[graft.Maintenance.releasingNewBlocks]]);
+    * the edge list stays persisted across rounds. Standard
+    * localCheckpoint caveat applies:
     * consume the result before releasing the session's blocks
     * ([[graft.Maintenance.releaseCachedBlocks]]) — Verify/Bench
     * materialize per query, so the contract holds.

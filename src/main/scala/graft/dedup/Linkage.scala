@@ -285,7 +285,11 @@ object Linkage {
     // wedge close) and `oriented` feeds the wedge self-join's two sides
     // — un-checkpointed, an in-plan pair derivation (the Levenshtein
     // fuzzy join) appeared 11x in graph_triangles' physical plan. Both
-    // frames are edge-sized.
+    // frames are edge-sized. Like every localCheckpoint seam in the
+    // engine this assumes local mode (see GraftSession): on a cluster a
+    // lost executor takes the truncated-lineage blocks with it and the
+    // job fails; Maintenance.releaseCachedBlocks frees them between
+    // queries.
     val edges = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
       .localCheckpoint(eager = false)
     val deg = edges.select(col("u").as("id"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.GraftExtensions
+import graft.{GraftExtensions, Maintenance}
 import graft.dedup.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -84,16 +84,11 @@ object CorpusIngest {
   def processBatch(batch: DataFrame, id: Long, stores: Stores): Unit = {
     val spark = batch.sparkSession
     GraftExtensions.register(spark)
-    // The dedup machinery lazily localCheckpoints the hashed sets. In a
+    // The dedup machinery lazily localCheckpoints the hashed sets; in a
     // long-running streaming query those blocks would otherwise accumulate
-    // per batch (the exact executor-store squeeze the round-4 bench audit
-    // root-caused) — so release precisely the RDDs persisted DURING this
-    // batch on the way out, leaving any other pipeline's blocks alone.
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    try processBatchInner(batch, id, stores)
-    finally spark.sparkContext.getPersistentRDDs
-      .filterNot { case (rddId, _) => persistedBefore.contains(rddId) }
-      .values.foreach(_.unpersist(blocking = false))
+    // per batch (the executor-store squeeze the round-4 bench audit
+    // root-caused).
+    Maintenance.releasingNewBlocks(spark)(processBatchInner(batch, id, stores))
   }
 
   private def processBatchInner(batch: DataFrame, id: Long, stores: Stores): Unit = {

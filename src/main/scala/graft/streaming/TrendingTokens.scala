@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Maintenance
 import graft.functions.MisraGries
 import graft.functions.TextFeatures.{hash60, hash60Sql, tokens}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -165,9 +166,7 @@ object TrendingTokens {
     */
   def processMergeBatch(batch: DataFrame, id: Long, stores: TrendStores,
       k: Int = MergeK, buckets: Int = MergeBuckets): Unit = {
-    val spark = batch.sparkSession
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    Maintenance.releasingNewBlocks(batch.sparkSession) {
       // eagerly checkpointed: the token frame feeds both the archive
       // write and the sketch aggregate
       val toks = batch.select(explode(tokens(col("text"))).as("token"))
@@ -179,9 +178,7 @@ object TrendingTokens {
         .agg(MisraGries.mg(k)(col("token")).as("cands"),
           count(lit(1)).as("n_bucket"))
         .write.mode("overwrite").parquet(s"${stores.summariesPath}/batch_id=$id")
-    } finally batch.sparkSession.sparkContext.getPersistentRDDs
-      .filterNot { case (rddId, _) => persistedBefore.contains(rddId) }
-      .values.foreach(_.unpersist(blocking = false))
+    }
   }
 
   /** The streaming wiring: document stream → per-batch archive + sketch. */

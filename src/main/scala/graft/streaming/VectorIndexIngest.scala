@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.GraftExtensions
+import graft.{GraftExtensions, Maintenance}
 import graft.similarity.Quantize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -92,8 +92,7 @@ object VectorIndexIngest {
       coverageThreshold: Double = 0.45): Unit = {
     val spark = batch.sparkSession
     GraftExtensions.register(spark)
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    Maintenance.releasingNewBlocks(spark) {
       val cents = centroidFrame(spark, stores)
       val routed = assign(batch.select(col("vec_id"), col("embedding")), cents)
       // int8 payload + routing in one bucket row; eagerly checkpointed —
@@ -108,9 +107,7 @@ object VectorIndexIngest {
         .agg(count(lit(1)).as("n"),
           sum(when(col("best_cos") < coverageThreshold, 1L).otherwise(0L)).as("n_low"))
         .write.mode("overwrite").parquet(s"${stores.healthPath}/batch_id=$id")
-    } finally spark.sparkContext.getPersistentRDDs
-      .filterNot { case (rddId, _) => persistedBefore.contains(rddId) }
-      .values.foreach(_.unpersist(blocking = false))
+    }
   }
 
   /** The streaming wiring: embedding stream → per-batch index append. */

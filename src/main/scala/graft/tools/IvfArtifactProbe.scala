@@ -1,8 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.similarity.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Rerunnable measurement behind PLANS.md's IVF-recall honesty note
@@ -28,12 +28,7 @@ object IvfArtifactProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(16)
     val e = Similarity.withNorms(Tables.embeddings(spark, dir))
     val brute = Similarity.knnBruteOn(e).select(col("query_id"), col("neighbor_id"))
     val denom = brute.count()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.similarity.JlProject
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Published tuning surface for the sign-JL tier: cosine distortion vs
@@ -18,16 +17,7 @@ object JlSweep {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val ps    = (if (args.length > 1) args(1) else "4,8,16,32")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(32)
     val geom = sys.env.getOrElse("JL_GEOM", "corpus")
     // materialize the corpus once: the synthetic clustered frame is an
     // expression chain, and referencing it across the sweep's joins

@@ -1,35 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc probe main: run a comma-separated list of registry queries
   * (args(0)) against a given SF dir (args(1), default sf0.1) and report
-  * wall time or the thrown exception per query. Mirrors Bench's session
-  * config so failures reproduce identically.
+  * wall time or the thrown exception per query. Uses Bench's session
+  * ([[graft.GraftSession]]) so failures reproduce identically.
   *
   * args(2): runs per query (default 1) — reports min + all times, Bench's
   * statistic, so probe numbers are comparable to tape numbers.
-  * args(3): `exclude` (default, Bench's config) or `noexclude` — drops the
-  * `InferFiltersFromGenerate` exclusion for rule-level A/B timing.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val names = args.headOption.map(_.split(",").toSeq).getOrElse(Seq.empty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs  = if (args.length > 2) args(2).toInt else 1
-    val excl  = if (args.length > 3) args(3) != "noexclude" else true
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    if (excl) builder.config("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(32)
     names.foreach { name =>
       // Lookup inside the try: a misspelled name prints FAILED and the
       // loop continues with the remaining queries.
@@ -47,7 +31,7 @@ object Probe {
         } finally graft.Maintenance.releaseCachedBlocks(spark, blocking = true)
       }
       if (times.nonEmpty)
-        println(f"[probe] $name excl=$excl min=${times.min}%.2f s all=${times.map(t => f"$t%.2f").mkString(",")}")
+        println(f"[probe] $name min=${times.min}%.2f s all=${times.map(t => f"$t%.2f").mkString(",")}")
     }
     spark.stop()
   }

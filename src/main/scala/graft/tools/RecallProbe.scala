@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftExtensions, ScaleProbe, Tables}
+import graft.{GraftExtensions, GraftSession, ScaleProbe, Tables}
 import graft.similarity.{IvfTrained, PqAnn}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -78,15 +78,7 @@ object RecallProbe {
       .split(",").map(_.trim.toInt).toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val tmp   = if (args.length > 2) args(2) else "/tmp/scale_probe"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
 
     // RECALL_GEOM=clustered swaps the corpus for a PLANTED-CLUSTER
     // geometry of the same size/shape (deterministic, hash-derived):

@@ -82,8 +82,10 @@ class AsofJoinSpec extends SparkSpec {
   test("optimizer rule pushes left-only filters below the as-of join") {
     GraftExtensions.register(spark)
     import spark.implicits._
+    // checkpointed: a LocalRelation left side would fold the pushed filter
+    // into the relation itself, leaving no Filter node to find
     val l = Seq(("A", ts("2024-01-01 10:00:00"), 1L),
-      ("B", ts("2024-01-01 10:00:00"), 2L)).toDF("symbol", "t", "v")
+      ("B", ts("2024-01-01 10:00:00"), 2L)).toDF("symbol", "t", "v").localCheckpoint()
     val r = Seq(("A", ts("2024-01-01 09:00:00"), 2.0)).toDF("symbol", "rt", "x")
     val joined   = AsofJoin.asofJoin(l, r, "symbol", "t", "rt")
     val filtered = joined.filter(col("symbol") === "A" && col("x") > 1.0)

@@ -41,16 +41,6 @@ object SparkSpec {
   /** Jobs started, and the task counts of the stages completed (sorted). */
   final case class Launched(jobs: Int, stageTasks: Seq[Int])
 
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** Built by [[GraftSession]], so specs check the plans the bench times. */
+  lazy val session: SparkSession = GraftSession(4)
 }

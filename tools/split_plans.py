@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Split a `graft.PlanAudit` sbt log into per-query plan files.
+"""Split a `graft.tools.PlanAudit explain` sbt log into per-query plan files.
 
 Usage: split_plans.py <audit.log> <outdir> <suffix>
 
