@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Driver-side block hygiene for long-lived sessions.
   *
@@ -47,6 +49,52 @@ object Maintenance {
     finally sc.getPersistentRDDs
       .filterNot { case (id, _) => before.contains(id) }
       .values.foreach(_.unpersist(blocking = false))
+  }
+
+  /** The block policy of an iterative loop's EAGER per-round seams. Each
+    * round checkpoints its state through [[seam]] (an eager
+    * `localCheckpoint`: it truncates lineage, so the per-round plan stays
+    * constant-size), then calls [[endRound]], which releases the PREVIOUS
+    * round's seams — the truncated lineage no longer reads them, so at
+    * most two generations are live. Only RDDs that [[seam]] pinned are
+    * released: a frame the loop persists for its whole lifetime (cached
+    * before the loop, first computed inside round 1) keeps its blocks.
+    *
+    * Like every `localCheckpoint` seam this assumes local mode (see
+    * [[GraftSession]]): a seam's blocks die with their executor. Lazy
+    * (`eager = false`) seams stay outside the helper: one materializes
+    * only when the next round runs, so it cannot be released round by
+    * round.
+    */
+  final class RoundSeams {
+    private var previous, current = Vector.empty[RDD[_]]
+
+    /** Eagerly localCheckpoint `df` and record the RDD it pins. */
+    def seam(df: DataFrame): DataFrame = {
+      val out = df.localCheckpoint()
+      current :+= out.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+      out
+    }
+
+    /** Release the previous round's seams; this round's become the
+      * previous generation.
+      */
+    def endRound(): Unit = {
+      previous.foreach(_.unpersist(blocking = false))
+      previous = current
+      current = Vector.empty
+    }
+
+    /** End a settled round that replaced nothing: release its own seams
+      * and keep the previous generation live.
+      */
+    def dropRound(): Unit = {
+      current.foreach(_.unpersist(blocking = false))
+      current = Vector.empty
+    }
+
+    /** Release every recorded seam, once nothing reads them any more. */
+    def close(): Unit = { dropRound(); endRound() }
   }
 
   /** Silence two known-benign WARN firehoses so the mains' stderr keeps

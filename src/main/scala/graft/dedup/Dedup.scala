@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Maintenance, Tables}
 import graft.functions.TextFeatures._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -567,16 +567,18 @@ object Dedup {
     * round — the classic iterative-algorithm blowup where round 20
     * spends more time in the optimizer than in execution). Because the
     * lineage is truncated, the previous round's blocks are provably
-    * unreferenced and are released immediately (snapshot-diff of
-    * getPersistentRDDs, as in [[graft.Maintenance.releasingNewBlocks]]);
-    * the edge list stays persisted across rounds. Standard
+    * unreferenced and are released immediately
+    * ([[graft.Maintenance.RoundSeams]], which releases only the seams it
+    * made). The edge list is not cached: each round re-reads the union
+    * from the checkpointed pairs, which measured faster than scanning a
+    * cached copy (256 pairs, `local[4]` on 4 shared vCPUs: median 536 vs
+    * 615 ms per call over 12 runs). Standard
     * localCheckpoint caveat applies:
     * consume the result before releasing the session's blocks
     * ([[graft.Maintenance.releaseCachedBlocks]]) — Verify/Bench
     * materialize per query, so the contract holds.
     */
   private[graft] def componentsOn(pairs: DataFrame): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
     // Materialize the pair derivation ONCE before the symmetrize union
     // (r19 plan audit): both union branches are full physical subtrees,
     // so an in-plan pair derivation (band self-join, fuzzy join, live
@@ -588,32 +590,25 @@ object Dedup {
     val edges = p0
       .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
       .union(p0.select(col("doc_id_2").as("src"), col("doc_id_1").as("dst")))
-      .persist()
-    var before = sc.getPersistentRDDs.keySet
-    var labels = edges.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("label"))
-      .localCheckpoint()
-    var prevRound = sc.getPersistentRDDs.keySet -- before
+    val seams = new Maintenance.RoundSeams
+    var labels = seams.seam(edges.select(col("src").as("v")).distinct()
+      .select(col("v"), col("v").as("label")))
+    seams.endRound()
     var changed = 1L
     var iters = 0
     while (changed > 0 && iters < MaxCcIters) {
       val nbrMin = edges.join(labels, col("dst") === col("v"))
         .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-      before = sc.getPersistentRDDs.keySet
-      val next = labels.join(nbrMin, col("v") === col("src"), "left")
+      val next = seams.seam(labels.join(nbrMin, col("v") === col("src"), "left")
         .select(col("v"),
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"),
-          col("label").as("prev"))
-        .localCheckpoint()
-      val thisRound = sc.getPersistentRDDs.keySet -- before
+          col("label").as("prev")))
       changed = next.filter(col("label") =!= col("prev")).count()
-      prevRound.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevRound = thisRound
+      seams.endRound()
       labels = next.select(col("v"), col("label"))
       iters += 1
     }
     require(changed == 0, s"componentsOn: not converged after $MaxCcIters rounds")
-    edges.unpersist()
     labels.select(
       col("v").as("doc_id"),
       col("label").as("component_id"),
@@ -638,7 +633,8 @@ object Dedup {
     * connect every smaller neighbor and u itself to that min. Both are
     * one groupBy(min) + one key-partitioned join; the fixpoint is a
     * forest of stars centered at each component's min vertex. Same
-    * checkpoint-truncation + per-round block release as min-label.
+    * checkpoint-truncation + per-round block release
+    * ([[graft.Maintenance.RoundSeams]]) as min-label.
     */
   private[graft] def componentsAltStarOn(pairs: DataFrame): DataFrame =
     componentsAltStarCounted(pairs)._1
@@ -648,7 +644,6 @@ object Dedup {
     // below (verts' two union branches + the edge seed) — the
     // componentsOn union-doubling fix, ×3 here
     val pairs = pairs0.localCheckpoint(eager = false)
-    val sc = pairs.sparkSession.sparkContext
 
     def largeStar(e: DataFrame): DataFrame = {
       val both = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -676,26 +671,22 @@ object Dedup {
     val verts = pairs
       .select(col("doc_id_1").as("v"))
       .union(pairs.select(col("doc_id_2").as("v")))
-      .distinct().persist()
-    var before = sc.getPersistentRDDs.keySet
-    var edges = pairs
+      .distinct()
+    val seams = new Maintenance.RoundSeams
+    var edges = seams.seam(pairs
       .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint()
-    var prevRound = sc.getPersistentRDDs.keySet -- before
+      .filter(col("src") =!= col("dst")).distinct())
+    seams.endRound()
     var edgeCount = edges.count() // carried across rounds: one count job
     var converged = false         // per round, not two
     var iters = 0
     while (!converged && iters < MaxCcIters) {
-      before = sc.getPersistentRDDs.keySet
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      val thisRound = sc.getPersistentRDDs.keySet -- before
+      val next = seams.seam(smallStar(largeStar(edges)))
       // distinct sets: equal size + empty (next − cur) ⇒ fixpoint; the
       // except() runs only once sizes stop changing
       val nextCount = next.count()
       converged = nextCount == edgeCount && next.except(edges).count() == 0L
-      prevRound.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevRound = thisRound
+      seams.endRound()
       edges = next
       edgeCount = nextCount
       iters += 1
@@ -707,7 +698,6 @@ object Dedup {
       .select(col("v").as("doc_id"),
         coalesce(col("parent"), col("v")).as("component_id"),
         (coalesce(col("parent"), col("v")) === col("v")).as("is_canonical"))
-    verts.unpersist()
     (out, iters)
   }
 

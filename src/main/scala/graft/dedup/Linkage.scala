@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Maintenance, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -487,39 +487,23 @@ object Linkage {
 
   private[graft] def graphKcoreOn(pairs: DataFrame,
       rounds: Int = KCoreRounds): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
     val base = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
       .localCheckpoint()
     def coreNodes(k: Int): DataFrame = {
+      // at most TWO edge generations live at any moment (the r13 probe
+      // OOM'd at the 26M-edge 100× tier retaining all 16)
+      val seams = new Maintenance.RoundSeams
       var edges = base
-      // componentsOn's block discipline: each round's checkpoint replaces
-      // the previous one, whose blocks unpersist immediately — at most
-      // TWO edge generations live at any moment (the r13 probe OOM'd at
-      // the 26M-edge 100× tier retaining all 16)
-      var prevRound: scala.collection.Set[Int] = Set.empty[Int]
       for (_ <- 1 to rounds) {
-        val deg = edges.select(col("u").as("id"))
-          .unionAll(edges.select(col("v").as("id")))
-          .groupBy("id").agg(count(lit(1)).as("d"))
-        val keep = deg.filter(col("d") >= k).select("id")
-        val before = sc.getPersistentRDDs.keySet
-        edges = edges
-          .join(keep.select(col("id").as("u")), Seq("u"), "left_semi")
-          .join(keep.select(col("id").as("v")), Seq("v"), "left_semi")
-          .select(col("u"), col("v"))
-          .localCheckpoint()
-        val thisRound = sc.getPersistentRDDs.keySet -- before
-        prevRound.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-        prevRound = thisRound
+        edges = seams.seam(peelRound(edges, k))
+        seams.endRound()
       }
       // the node set (tiny) materializes eagerly, after which the last
       // round's edge blocks are dead too
       val out = edges
         .select(explode(array(col("u"), col("v"))).as("s_suppkey")).distinct()
         .localCheckpoint()
-      prevRound.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+      seams.close()
       out
     }
     val nodes = base.select(explode(array(col("u"), col("v"))).as("s_suppkey")).distinct()
@@ -530,6 +514,20 @@ object Linkage {
         coalesce(col("c2"), lit(false)).as("core2"),
         coalesce(col("c3"), lit(false)).as("core3"))
       .orderBy("s_suppkey")
+  }
+
+  /** One k-core peel round over (u, v) edges: drop every edge with an
+    * endpoint of degree < k.
+    */
+  private def peelRound(edges: DataFrame, k: Int): DataFrame = {
+    val keep = edges.select(col("u").as("id"))
+      .unionAll(edges.select(col("v").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("d"))
+      .filter(col("d") >= k).select("id")
+    edges
+      .join(keep.select(col("id").as("u")), Seq("u"), "left_semi")
+      .join(keep.select(col("id").as("v")), Seq("v"), "left_semi")
+      .select(col("u"), col("v"))
   }
 
   // ---- graph_coreness: full core decomposition ---------------------------
@@ -555,7 +553,8 @@ object Linkage {
     *
     * Scale (100 TB): inherits the kcore economics — per round one
     * partial-aggregable degree count + two semi-joins over a stream
-    * that only SHRINKS, with the two-generation checkpoint discipline;
+    * that only SHRINKS, with two edge generations live at a time
+    * ([[graft.Maintenance.RoundSeams]]);
     * the final coreness fold is one union of ≤ k_max node sets + a
     * max aggregate. k_max is the price knob and is data-bounded
     * (degeneracy), not corpus-bounded.
@@ -579,7 +578,6 @@ object Linkage {
 
   private[graft] def graphCorenessOn(pairs: DataFrame,
       kMax: Int = CorenessMaxK, rounds: Int = KCoreRounds): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
     var edges = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
       .localCheckpoint()
     val nodes = edges
@@ -588,31 +586,18 @@ object Linkage {
     // per-threshold core node sets, each eagerly checkpointed (small —
     // they shrink with k) so edge generations can release underneath
     var coreSets = List.empty[DataFrame]
-    var prevRound: scala.collection.Set[Int] = Set.empty[Int]
+    val seams = new Maintenance.RoundSeams
     for (k <- 2 to kMax) {
       for (_ <- 1 to rounds) {
-        val deg = edges.select(col("u").as("id"))
-          .unionAll(edges.select(col("v").as("id")))
-          .groupBy("id").agg(count(lit(1)).as("d"))
-        val keep = deg.filter(col("d") >= k).select("id")
-        val before = sc.getPersistentRDDs.keySet
-        edges = edges
-          .join(keep.select(col("id").as("u")), Seq("u"), "left_semi")
-          .join(keep.select(col("id").as("v")), Seq("v"), "left_semi")
-          .select(col("u"), col("v"))
-          .localCheckpoint()
-        val thisRound = sc.getPersistentRDDs.keySet -- before
-        prevRound.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-        prevRound = thisRound
+        edges = seams.seam(peelRound(edges, k))
+        seams.endRound()
       }
       coreSets ::= edges
         .select(explode(array(col("u"), col("v"))).as("id")).distinct()
         .withColumn("k", lit(k))
         .localCheckpoint()
     }
-    prevRound.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    seams.close()
     val cores = coreSets.reduce(_ unionAll _)
     nodes
       .join(cores, col("s_suppkey") === col("id"), "left")
@@ -686,30 +671,28 @@ object Linkage {
         expr("CAST(size(filter(transform(cs, (x, i) -> x >= i + 1), b -> b)) AS BIGINT)")
           .as("c"))
 
-  private def hindexFixpoint(pairs0: DataFrame, rounds: Int,
-      checkConverged: Boolean): DataFrame = {
-    // one evaluation of the pair derivation under the symmetrize union
-    // (the componentsOn union-doubling fix — graph_coreness_hindex paid
-    // its fuzzy join twice per read)
+  /** Both directions (u, v) of a pair frame's (a_id, b_id) edges,
+    * eagerly checkpointed. The pairs are checkpointed lazily first, so an
+    * in-plan pair derivation (the fuzzy join) is evaluated once, not once
+    * per union branch.
+    */
+  private def symmetrized(pairs0: DataFrame): DataFrame = {
     val pairs = pairs0.localCheckpoint(eager = false)
-    val sc = pairs.sparkSession.sparkContext
-    val sym = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
+    pairs.select(col("a_id").as("u"), col("b_id").as("v"))
       .unionAll(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
       .localCheckpoint()
-    var c = sym.select(col("u").as("id")).groupBy("id")
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint()
-    // componentsOn's two-generation block discipline: each round's
-    // checkpoint replaces the previous one immediately
-    var prevRound: scala.collection.Set[Int] = Set.empty[Int]
+  }
+
+  private def hindexFixpoint(pairs0: DataFrame, rounds: Int,
+      checkConverged: Boolean): DataFrame = {
+    val sym = symmetrized(pairs0)
+    val seams = new Maintenance.RoundSeams
+    var c = seams.seam(sym.select(col("u").as("id")).groupBy("id")
+      .agg(count(lit(1)).as("c")))
+    seams.endRound()
     for (_ <- 1 to rounds) {
-      val before = sc.getPersistentRDDs.keySet
-      val next = hindexRound(sym, c).localCheckpoint()
-      val thisRound = sc.getPersistentRDDs.keySet -- before
-      prevRound.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevRound = thisRound
-      c = next
+      c = seams.seam(hindexRound(sym, c))
+      seams.endRound()
     }
     if (checkConverged) {
       // node sets are identical round over round (every node with an
@@ -805,39 +788,21 @@ object Linkage {
     */
   private[graft] def graphCorenessCappedCountingOn(pairs0: DataFrame,
       kMax: Int = CorenessMaxK): DataFrame = {
-    // one evaluation of the pair derivation under the symmetrize union
-    // (the componentsOn union-doubling fix): graph_coreness/graph_kcore
-    // pass the in-plan fuzzy join here, which ran twice per read
-    val pairs = pairs0.localCheckpoint(eager = false)
-    val sc = pairs.sparkSession.sparkContext
-    val sym = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
-      .unionAll(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
-      .localCheckpoint()
-    var c = sym.select(col("u").as("id")).groupBy("id")
-      .agg(least(count(lit(1)), lit(kMax.toLong)).as("c"))
-      .localCheckpoint()
-    var prevRound: scala.collection.Set[Int] = Set.empty[Int]
+    val sym = symmetrized(pairs0)
+    val seams = new Maintenance.RoundSeams
+    var c = seams.seam(sym.select(col("u").as("id")).groupBy("id")
+      .agg(least(count(lit(1)), lit(kMax.toLong)).as("c")))
+    seams.endRound()
     var rounds = 0L
     var cap: Long = MaxHcountRounds
     var capExtended = false
     var converged = false
     while (!converged && rounds < cap) {
-      val before = sc.getPersistentRDDs.keySet
-      val next = sym
-        .join(c.select(col("id").as("v"), col("c").as("nc")), Seq("v"))
-        .select(col("u"),
-          explode(expr("sequence(CAST(1 AS BIGINT), nc)")).as("h"))
-        .groupBy(col("u"), col("h")).agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") >= col("h"))
-        .groupBy(col("u")).agg(max(col("h")).as("c"))
-        .select(col("u").as("id"), col("c"))
-        .localCheckpoint()
+      val next = seams.seam(hindexCountRound(sym, c)
+        .select(col("id"), col("h").as("c")))
       converged = next.as("n").join(c.as("p"), col("n.id") === col("p.id"))
         .filter(col("n.c") =!= col("p.c")).isEmpty
-      val thisRound = sc.getPersistentRDDs.keySet -- before
-      prevRound.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevRound = thisRound
+      seams.endRound()
       c = next
       rounds += 1
       if (!converged && rounds >= cap && !capExtended) {
@@ -854,6 +819,21 @@ object Linkage {
     c.select(col("id").as("s_suppkey"), col("c").cast("int").as("coreness"))
       .orderBy("s_suppkey")
   }
+
+  /** One COUNTING-form h-index round: each source node u of the (u, v)
+    * edges gets h = the largest level with ≥ h neighbors labeled ≥ h,
+    * over neighbor labels (id, c). Each edge explodes to one row per
+    * level ≤ c(v), and the per-(node, level) counts partial-aggregate.
+    * A node with no edge in `sym` has no output row. Output: (id, h).
+    */
+  private def hindexCountRound(sym: DataFrame, labels: DataFrame): DataFrame =
+    sym.join(labels.select(col("id").as("v"), col("c").as("nc")), Seq("v"))
+      .select(col("u"),
+        explode(expr("sequence(CAST(1 AS BIGINT), nc)")).as("h"))
+      .groupBy(col("u"), col("h")).agg(count(lit(1)).as("cnt"))
+      .filter(col("cnt") >= col("h"))
+      .groupBy(col("u")).agg(max(col("h")).as("h"))
+      .select(col("u").as("id"), col("h"))
 
   /** [[peelSql]] generalized to an arbitrary source edge CTE — the
     * successive-decomposition chain starts threshold k from threshold
@@ -1820,7 +1800,6 @@ object Linkage {
     // anti-joins) under the symmetrize union — the componentsOn
     // union-doubling fix
     val survivorEdges = survivorEdges0.localCheckpoint(eager = false)
-    val sc = baseMap.sparkSession.sparkContext
     val sym = survivorEdges.select(col("a_id").as("u"), col("b_id").as("v"))
       .unionAll(survivorEdges.select(col("b_id").as("u"), col("a_id").as("v")))
       .persist()
@@ -1835,28 +1814,27 @@ object Linkage {
     // shuffle join when an adversarial takedown grows it toward map
     // size (a forced broadcast was measured 8× worse on the %7 arm at
     // 100× — a ~1.3M-row driver collect per round, twice).
-    // base's blocks are checkpointed BEFORE the round-tracking snapshot
-    // so the per-round hygiene can never release them — base must
-    // outlive every round AND the final resolved read.
+    // base is checkpointed outside the round seams, so the per-round
+    // release never touches it — base must outlive every round AND the
+    // final resolved read.
     val base = baseMap
       .select(col("s_suppkey").as("id"), col("coreness").cast("long").as("c"))
       .localCheckpoint()
-    var before = sc.getPersistentRDDs.keySet
-    var overlay = base.filter(lit(false)).localCheckpoint()
+    val seams = new Maintenance.RoundSeams
+    var overlay = seams.seam(base.filter(lit(false)))
     // current labels = base overridden by the overlay, as a lazy plan —
     // never persisted, so no per-round map-sized state
     def resolved: DataFrame = base.as("b")
       .join(overlay.select(col("id").as("ov_id"), col("c").as("ov_c")),
         col("b.id") === col("ov_id"), "left")
       .select(col("b.id").as("id"), coalesce(col("ov_c"), col("b.c")).as("c"))
-    var frontier = seeds.select(col("id")).distinct().localCheckpoint()
-    var prevRound = sc.getPersistentRDDs.keySet -- before
+    var frontier = seams.seam(seeds.select(col("id")).distinct())
+    seams.endRound()
     var rounds = 0L
     var cap: Long = MaxLocalRounds
     var capExtended = false
     var active = frontier.count() > 0
     while (active && rounds < cap) {
-      before = sc.getPersistentRDDs.keySet
       val cur = resolved
       // h-index over SURVIVING neighbors' current labels, frontier only,
       // in the COUNTING spelling (labels are capped ≤ k_max here — the
@@ -1869,50 +1847,35 @@ object Linkage {
       // labels are ≥ 1 by construction (a label reaches 0 only with no
       // surviving edges, and such a node never appears as a neighbor),
       // so the sequence is never the count-down trap.
-      val h = sym.join(frontier.select(col("id").as("u")), Seq("u"), "left_semi")
-        .join(cur.select(col("id").as("v"), col("c").as("nc")), Seq("v"))
-        .select(col("u"),
-          explode(expr("sequence(CAST(1 AS BIGINT), nc)")).as("lvl"))
-        .groupBy(col("u"), col("lvl")).agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") >= col("lvl"))
-        .groupBy(col("u")).agg(max(col("lvl")).as("h"))
-        .select(col("u").as("id"), col("h"))
-      val changed = frontier.join(cur, Seq("id"))
+      val h = hindexCountRound(
+        sym.join(frontier.select(col("id").as("u")), Seq("u"), "left_semi"), cur)
+      val changed = seams.seam(frontier.join(cur, Seq("id"))
         .join(h, Seq("id"), "left")
         .select(col("id"), col("c"),
           least(col("c"), coalesce(col("h"), lit(0L))).as("nc"))
         .filter(col("nc") < col("c"))
-        .select(col("id"), col("nc").as("c"))
-        .localCheckpoint()
+        .select(col("id"), col("nc").as("c")))
       active = changed.count() > 0
       if (active) {
         // fold the round's drops into the overlay (latest label wins) —
         // O(cascade) rows checkpointed, never the map
-        overlay = overlay
+        overlay = seams.seam(overlay
           .join(changed.select(col("id").as("ch_id")),
             col("id") === col("ch_id"), "left_anti")
-          .unionByName(changed)
-          .localCheckpoint()
+          .unionByName(changed))
         // only neighbors of a dropped label can have a newly-broken
         // equation (a node that dropped together with its neighbor is
         // itself such a neighbor)
-        frontier = sym
+        frontier = seams.seam(sym
           .join(changed.select(col("id").as("v")), Seq("v"), "left_semi")
-          .select(col("u").as("id")).distinct()
-          .localCheckpoint()
-      }
-      val thisRound = sc.getPersistentRDDs.keySet -- before
-      if (active) {
+          .select(col("u").as("id")).distinct())
         // overlay/frontier were replaced: the previous generation is dead
-        prevRound.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-        prevRound = thisRound
+        seams.endRound()
       } else {
         // settled: this round produced only the empty `changed` frame —
-        // the LIVE overlay sits in prevRound and must survive for the
-        // reader (the final resolved plan reads base ⊕ overlay)
-        thisRound.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+        // the LIVE overlay is the previous generation and must survive
+        // for the reader (the final resolved plan reads base ⊕ overlay)
+        seams.dropRound()
       }
       rounds += 1
       if (active && rounds >= cap && !capExtended) {

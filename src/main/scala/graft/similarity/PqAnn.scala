@@ -172,8 +172,9 @@ object PqAnn {
     pqArtifactsFrom(subVectors(emb, tier), tier)
 
   /** [[pqArtifacts]] against a GIVEN (vec_id, sub, qs) sub-vector frame
-    * (the balanced tier's split point — same Lloyd machinery, different
-    * dim→subspace assignment).
+    * (the split point of the balanced tier, whose dim→subspace
+    * assignment differs, and of the residual tier, which quantizes
+    * residual sub-vectors — same Lloyd machinery).
     */
   private def pqArtifactsFrom(subv: DataFrame,
       tier: Tier): (DataFrame, DataFrame) = {
@@ -940,7 +941,7 @@ object PqAnn {
     * All arithmetic stays exact-integer: residuals are differences of
     * the shared fixed-point frames ([[IvfTrained.scaledQuantized]] and
     * [[KMeansExact.centroidsPacked]] both live at CScale·QScale), the
-    * per-subspace Lloyd rounds run the [[pqEncode]] recipe verbatim
+    * per-subspace Lloyd rounds run [[pqArtifactsFrom]] itself
     * (the inputs arrive pre-scaled, so the update's floor-division
     * identity applies unchanged), and the oracle unrolls the identical
     * chain — bit-for-bit at all three SFs.
@@ -984,28 +985,8 @@ object PqAnn {
       .select(col("vec_id"), explode(resSubSlices("rv", tier)).as("t"))
       .select(col("vec_id"), col("t.sub").as("sub"), col("t.qs").as("qs"))
       .localCheckpoint(eager = false)
-    var c = subv.filter(col("vec_id") % tier.seedMod === 0 && col("vec_id") < tier.seedMax)
-      .select(col("sub"), col("vec_id").as("code"), col("qs").as("cv"))
-    def assign(cb: DataFrame): DataFrame = {
-      val packed = cb.groupBy(col("sub"))
-        .agg(collect_list(struct(col("code"), col("cv"))).as("l"))
-        .select(col("sub"), expr("array_sort(l)").as("cbm"))
-      subv.join(broadcast(packed), Seq("sub"))
-        .select(col("vec_id"), col("sub"),
-          expr("pq_argmin_code(qs, cbm)").as("code"))
-    }
-    for (_ <- 1 to Rounds) {
-      val a = assign(c)
-      c = a.join(subv, Seq("vec_id", "sub"))
-        .groupBy(col("sub"), col("code"))
-        .agg(expr("vec_sum(cast(qs as array<double>))").as("sv"),
-          count(lit(1)).as("n"))
-        .select(col("sub"), col("code"),
-          expr("transform(sv, x -> (cast(x as bigint) - pmod(cast(x as bigint), n)) div n)")
-            .as("cv"))
-        .localCheckpoint(eager = false)
-    }
-    ResArtifacts(sq, cents, asg, assign(c), c)
+    val (enc, c) = pqArtifactsFrom(subv, tier)
+    ResArtifacts(sq, cents, asg, enc, c)
   }
 
   /** PER-(query, probed cell) residual distance tables — the residual

@@ -5,8 +5,9 @@ package graft.tools
   * wall time or the thrown exception per query. Uses Bench's session
   * ([[graft.GraftSession]]) so failures reproduce identically.
   *
-  * args(2): runs per query (default 1) — reports min + all times, Bench's
-  * statistic, so probe numbers are comparable to tape numbers.
+  * args(2): timed runs per query (default 1) — reports min + all times,
+  * Bench's statistic, after one untimed warm-up run as in Bench, so
+  * probe numbers are comparable to tape numbers.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -16,13 +17,13 @@ object Probe {
     val spark = graft.GraftSession(32)
     names.foreach { name =>
       // Lookup inside the try: a misspelled name prints FAILED and the
-      // loop continues with the remaining queries.
-      val times = (1 to runs).flatMap { _ =>
+      // loop continues with the remaining queries. Run 0 is the warm-up.
+      val times = (0 to runs).flatMap { i =>
         val t0 = System.nanoTime()
         try {
           graft.SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
+          Some((System.nanoTime() - t0) / 1e9).filter(_ => i > 0)
         } catch {
           case e: Throwable =>
             println(s"[probe] $name FAILED: $e")

@@ -1,9 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Batch-store compaction laws: content preservation, file-count
-  * reduction, idempotence, and write-ahead crash recovery.
+  * reduction, idempotence, and write-ahead crash recovery; and the
+  * block policy of an iterative loop's round seams.
   */
 class MaintenanceSpec extends SparkSpec {
 
@@ -234,5 +241,73 @@ class MaintenanceSpec extends SparkSpec {
     // every retained read identical
     graft.streaming.DedupEdgeIngest.compact(spark, s, Seq(compPath))
     assert(snap(2L) == last && snap(1L) == prev)
+  }
+
+  private def live: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def pinned(df: DataFrame): Int =
+    df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+
+  test("round seams release exactly the previous round: a cache round 1 first computes survives") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val before = live
+    // persisted before the loop, first computed inside round 1
+    val kept = (1L to 200L).toDF("v").repartition(4).persist()
+    val seams = new Maintenance.RoundSeams
+    val r1 = seams.seam(kept.select(($"v" * 2).as("v")))
+    seams.endRound()
+    val r2 = seams.seam(kept.join(r1, "v"))
+    seams.endRound()
+    val fresh = live -- before
+    assert(!fresh.contains(pinned(r1)), "round 1's seam is released")
+    assert(fresh.contains(pinned(r2)), "round 2's seam is the live generation")
+    val cache = fresh - pinned(r2)
+    assert(cache.size == 1, s"the loop-lifetime cache stays registered: $fresh")
+    assert(sc.getRDDStorageInfo.exists(i => cache(i.id) && i.numCachedPartitions > 0),
+      "the loop-lifetime cache keeps its blocks")
+    assert(r2.count() == 100L)
+    kept.unpersist()
+    seams.close()
+    assert((live -- before).isEmpty)
+  }
+
+  test("a settled round drops its own seams and keeps the previous generation; close releases it") {
+    import spark.implicits._
+    val seams = new Maintenance.RoundSeams
+    val a = seams.seam(spark.range(10).toDF("v"))
+    seams.endRound()
+    val b = seams.seam(a.filter($"v" > 100))
+    seams.dropRound()
+    assert(live.contains(pinned(a)) && !live.contains(pinned(b)))
+    assert(a.count() == 10L)
+    seams.close()
+    assert(!live.contains(pinned(a)))
+  }
+
+  test("componentsOn leaves at most two RDDs registered for an 8- and a 30-node chain") {
+    import spark.implicits._
+    def leftover(n: Long): Int = {
+      val before = live
+      val out = graft.dedup.Dedup.componentsOn(
+        (0L until n - 1).map(i => (i, i + 1)).toDF("doc_id_1", "doc_id_2"))
+      val labels = out.collect()
+      assert(labels.length == n && labels.forall(_.getLong(1) == 0L))
+      (live -- before).size
+    }
+    // the pair checkpoint and the last label generation: 8 and 30 rounds
+    // without the per-round release would leave 8+ and 30+
+    val short = leftover(8)
+    val long = leftover(30)
+    assert(short <= 2 && long <= 2, s"8-node chain left $short, 30-node chain left $long")
+  }
+
+  test("only Maintenance reads the session's persistent-RDD registry") {
+    val root = Paths.get("src/main/scala")
+    val readers = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains("getPersistentRDDs"))
+      .map(root.relativize(_).toString).toSet
+    assert(readers == Set("graft/Maintenance.scala"))
   }
 }
