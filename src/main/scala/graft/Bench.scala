@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line (also written to SPARK_GRAFT_BENCH_OUT, default
   * `bench_out.json`, so harnesses never have to scrape it out of sbt log
@@ -34,6 +36,24 @@ object Bench {
 
   private val Runs = 3
 
+  /** One run of a registry query on `dir`: the whole plan executes into a
+    * noop sink, then the session's cached blocks are released
+    * ([[Maintenance.releaseCachedBlocks]]), whether or not the run threw.
+    * Right is the wall time in seconds, release included; Left is what
+    * the run threw. A thrown run is never timed: its near-zero work plus
+    * exception overhead would let an intermittently failing query report
+    * a misleadingly "fast" number.
+    */
+  def runOnce(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
+      dir: String): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    val thrown =
+      try { fn(spark, dir).write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable => Some(e) }
+      finally Maintenance.releaseCachedBlocks(spark, blocking = true)
+    thrown.toLeft((System.nanoTime() - t0) / 1e9)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
@@ -42,31 +62,20 @@ object Bench {
     // tiniest SF so per-query timings measure the query, not first-use
     // class loading or C2 compilation of its codegen'd stages (cold first
     // runs are 4-10x the steady state).
-    SparkEntry.queries.values.foreach { fn =>
-      try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      Maintenance.releaseCachedBlocks(spark, blocking = true)
-    }
+    SparkEntry.queries.values.foreach(runOnce(spark, _, "/root/testdata/sf0.001"))
 
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // Keep only times from runs that actually completed: timing a thrown
-      // run (near-zero work + exception overhead) would let an
-      // intermittently failing query report a misleadingly "fast" number
-      // while also appearing in `failed`.
       val times = (1 to Runs).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
+        runOnce(spark, fn, sfDir) match {
+          case Right(secs) => Some(secs)
+          case Left(e) =>
             if (failed.add(name)) {
               System.err.println(s"[bench] $name FAILED: $e")
               e.printStackTrace()
             }
-            false
-          }
-          finally Maintenance.releaseCachedBlocks(spark, blocking = true)
-        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+            None
+        }
       }
       // MIN of the successful runs is the headline: the blocks are released
       // between runs, so every run does identical work and the spread is

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a [[SparkSession]] is built: `graft.Bench`, `graft.Verify`,
-  * `graft.Demo`, `graft.ScaleProbe`, the `graft.tools` mains and the test
+  * `graft.Demo`, the `graft.tools` mains and the test
   * suite's shared session all call [[GraftSession.apply]], so the plans the
   * tests check and the tools print are the plans the bench times.
   *
@@ -20,9 +20,9 @@ import org.apache.spark.sql.SparkSession
   *    `PushFilterThroughAsofJoin` runs inside operator optimization;
   *  - no UI.
   * The only inputs are the core count, which sets `local[cores]` and
-  * `spark.sql.shuffle.partitions = cores` (so `ScaleProbe`, which used a
-  * fixed 32 partitions, now gets one per core), and an optional master URL
-  * (`graft.Demo` reads it from `SPARK_MASTER`).
+  * `spark.sql.shuffle.partitions = cores` (so scale runs on
+  * [[ScaleProbe.scaledDir]] tables get one shuffle partition per core),
+  * and an optional master URL (`graft.Demo` reads it from `SPARK_MASTER`).
   *
   * Local mode is assumed. The engine's `localCheckpoint` seams keep their
   * blocks on the executor that computed them with the lineage truncated;

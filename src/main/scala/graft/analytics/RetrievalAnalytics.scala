@@ -265,15 +265,13 @@ object RetrievalAnalytics {
       .orderBy("query_id", "rank")
   }
 
-  private[graft] def hybridRrfOn(docs: DataFrame, emb: DataFrame,
-      queryIds: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        _ % 100 === 0): DataFrame = {
+  private[graft] def hybridRrfOn(docs: DataFrame, emb: DataFrame): DataFrame = {
     graft.GraftExtensions.register(docs.sparkSession)
     val scored = bm25ScoredOn(docs)
       .localCheckpoint(eager = false) // consumers: query-term pick + probe side
     // query construction: each query doc's top-QTerms characteristic terms
     val wq = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term").asc)
-    val qterms = scored.filter(queryIds(col("doc_id")))
+    val qterms = scored.filter(col("doc_id") % 100 === 0)
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= QTerms)
       .select(col("doc_id").as("query_id"), col("term"))
@@ -288,7 +286,7 @@ object RetrievalAnalytics {
       .select(col("query_id"), col("doc_id"), col("lex_rank"))
     // vector leg: exact cosine, the knn_brute shape at LegK depth
     val e = graft.similarity.Similarity.withNorms(emb)
-    val vq = e.filter(queryIds(col("vec_id")))
+    val vq = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("va"), col("n2").as("qn2"))
     val wv = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("doc_id").asc)
     val vecRank = e.withColumnRenamed("v", "vb")
@@ -456,22 +454,19 @@ object RetrievalAnalytics {
     hybridRrfServedFrames(spark, storeKey(dir),
       Tables.documents(spark, dir), Tables.embeddings(spark, dir), nprobe)
 
-  /** Frame-based served entry (`ScaleProbe` feeds the replica corpus
-    * here under its own store key; the registry path passes the sf
-    * tables). `queryIds` pins the query batch at replica scales — the
+  /** Frame-based served entry (the registry path passes the sf tables
+    * under their store key). Queries are the ids ≡ 0 (mod 100) — the
     * same bounded-batch contract as [[hybridRrfOn]].
     */
   private[graft] def hybridRrfServedFrames(spark: SparkSession, key: String,
-      docs: => DataFrame, emb: => DataFrame, nprobe: Int,
-      queryIds: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        _ % 100 === 0): DataFrame = {
+      docs: => DataFrame, emb: => DataFrame, nprobe: Int): DataFrame = {
     graft.GraftExtensions.register(spark)
     val st = servedStores(spark, key, docs, emb)
     // lexical leg: query construction + candidate probe, both off the
     // postings store; the index side of the probe join never exchanges
     val postings = spark.table(st.postingsTable)
     val wq = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term").asc)
-    val qterms = postings.filter(queryIds(col("doc_id")))
+    val qterms = postings.filter(col("doc_id") % 100 === 0)
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= QTerms)
       .select(col("doc_id").as("query_id"), col("term"))
@@ -486,7 +481,7 @@ object RetrievalAnalytics {
     // vector leg: route the query batch against the broadcast centroid
     // table, then scan only the probed cells (static partition pruning)
     val cents = spark.read.parquet(st.centroidsPath)
-    val rawQ = emb.filter(queryIds(col("vec_id")))
+    val rawQ = emb.filter(col("vec_id") % 100 === 0)
     val probes = graft.similarity.IvfTrained
       .probesOn(graft.similarity.IvfTrained.scaledQuantized(rawQ), cents, nprobe)
       .localCheckpoint(eager = false) // consumers: probe-id collect + member join
@@ -534,8 +529,6 @@ object RetrievalAnalytics {
   private[graft] def hybridRrfLive(spark: SparkSession, key: String,
       baseDocs: => DataFrame, emb: => DataFrame,
       delta: graft.streaming.PostingsIngest.Stores, nprobe: Int,
-      queryIds: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        _ % 100 === 0,
       tombstones: Option[DataFrame] = None): DataFrame = {
     graft.GraftExtensions.register(spark)
     val st = servedStores(spark, key, baseDocs, emb)
@@ -553,7 +546,7 @@ object RetrievalAnalytics {
       .select("doc_id", "term", "score")
       .localCheckpoint(eager = false) // consumers: query-term pick + probe
     val wq = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term").asc)
-    val qterms = scored.filter(queryIds(col("doc_id")))
+    val qterms = scored.filter(col("doc_id") % 100 === 0)
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= QTerms)
       .select(col("doc_id").as("query_id"), col("term"))
@@ -567,7 +560,7 @@ object RetrievalAnalytics {
       .select(col("query_id"), col("doc_id"), col("lex_rank"))
     // vector leg: the base store's trained cells, served
     val cents = spark.read.parquet(st.centroidsPath)
-    val rawQ = living(emb.filter(queryIds(col("vec_id"))), "vec_id")
+    val rawQ = living(emb.filter(col("vec_id") % 100 === 0), "vec_id")
     val probes = graft.similarity.IvfTrained
       .probesOn(graft.similarity.IvfTrained.scaledQuantized(rawQ), cents, nprobe)
       .localCheckpoint(eager = false)
@@ -605,9 +598,7 @@ object RetrievalAnalytics {
     */
   private[graft] def knnServedLive(spark: SparkSession, key: String,
       baseDocs: => DataFrame, baseEmb: => DataFrame, deltaEmb: => DataFrame,
-      nprobe: Int, tombstones: Option[DataFrame] = None,
-      queryIds: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        _ % 100 === 0): DataFrame = {
+      nprobe: Int, tombstones: Option[DataFrame] = None): DataFrame = {
     graft.GraftExtensions.register(spark)
     val st = servedStores(spark, key, baseDocs, baseEmb)
     val cents = spark.read.parquet(st.centroidsPath)
@@ -622,7 +613,7 @@ object RetrievalAnalytics {
     val dead = tombstones.map(t => t.select(col(t.columns.head).as("dead_id")))
     def living(df: DataFrame): DataFrame = dead.fold(df)(d =>
       df.join(broadcast(d), col("vec_id") === col("dead_id"), "left_anti"))
-    val rawQ = living(baseEmb.unionByName(deltaEmb).filter(queryIds(col("vec_id"))))
+    val rawQ = living(baseEmb.unionByName(deltaEmb).filter(col("vec_id") % 100 === 0))
     val probes = graft.similarity.IvfTrained
       .probesOn(graft.similarity.IvfTrained.scaledQuantized(rawQ), cents, nprobe)
       .localCheckpoint(eager = false)
@@ -909,8 +900,7 @@ object RetrievalAnalytics {
   def phraseSearchServed(spark: SparkSession, dir: String): DataFrame =
     phraseSearchServedFrames(spark, storeKey(dir), Tables.documents(spark, dir))
 
-  /** Frame-based served-phrase entry (`ScaleProbe` feeds replica corpora
-    * under their own store keys) — the `servedStores` memoization
+  /** Frame-based served-phrase entry — the `servedStores` memoization
     * contract on `key`.
     */
   private[graft] def phraseSearchServedFrames(spark: SparkSession, key: String,
@@ -1290,15 +1280,12 @@ object RetrievalAnalytics {
     knnServedPqFrames(spark, storeKey(dir),
       Tables.documents(spark, dir), Tables.embeddings(spark, dir))
 
-  /** Frame-based served-PQ entry (`ScaleProbe` feeds the replica corpus
-    * under its own store key; the registry path passes the sf tables).
-    * `queryIds` pins the query batch at replica scales — the
-    * bounded-batch contract.
+  /** Frame-based served-PQ entry (the registry path passes the sf
+    * tables under their store key). Queries are the ids ≡ 0 (mod 100) —
+    * the bounded-batch contract.
     */
   private[graft] def knnServedPqFrames(spark: SparkSession, key: String,
       docs: => DataFrame, emb: => DataFrame,
-      queryIds: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        _ % 100 === 0,
       dead: Option[DataFrame] = None): DataFrame = {
     graft.GraftExtensions.register(spark)
     val st = servedStores(spark, key, docs, emb)
@@ -1312,7 +1299,7 @@ object RetrievalAnalytics {
         df.join(broadcast(d), df("vec_id") === d("dead_id"), "left_anti")
       case None => df
     }
-    val rawQ = live(emb.filter(queryIds(col("vec_id"))))
+    val rawQ = live(emb.filter(col("vec_id") % 100 === 0))
     val probes = graft.similarity.IvfTrained
       .probesOn(graft.similarity.IvfTrained.scaledQuantized(rawQ), cents,
         graft.similarity.IvfTrained.NProbe)
@@ -1466,15 +1453,13 @@ object RetrievalAnalytics {
       Tables.documents(spark, dir), Tables.embeddings(spark, dir))
 
   private[graft] def knnServedPqResidualFrames(spark: SparkSession, key: String,
-      docs: => DataFrame, emb: => DataFrame,
-      queryIds: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        _ % 100 === 0): DataFrame = {
+      docs: => DataFrame, emb: => DataFrame): DataFrame = {
     graft.GraftExtensions.register(spark)
     val st = servedStores(spark, key, docs, emb)
     val pq = pqResStores(spark, key, emb)
     val cents = spark.read.parquet(st.centroidsPath)
     val qSq = graft.similarity.IvfTrained
-      .scaledQuantized(emb.filter(queryIds(col("vec_id"))))
+      .scaledQuantized(emb.filter(col("vec_id") % 100 === 0))
       .localCheckpoint(eager = false) // consumers: probes + tables
     val probes = graft.similarity.IvfTrained
       .probesOn(qSq, cents, graft.similarity.IvfTrained.NProbe)

@@ -1072,10 +1072,10 @@ object StarAnalytics {
       // derivation, PLUS two store probes, merge-on-read resolution and
       // a presentation sort). Structural, not a tuned constant; measured
       // 2.64 s compose vs 1.14 s rebuild at sf0.1/local[32] (min-of-3),
-      // and rebuild also won the multi-month ScaleProbe `scd2_live_xover`
-      // arms at probe scale (OPTIMIZATION_r19.md). Both spellings are
-      // law-pinned to the same truth (`Scd2LiveSpec`), so dispatch
-      // changes cost, never rows.
+      // and rebuild also won every multi-month crossover fraction
+      // probed at scale (`scd2_live_xover`, OPTIMIZATION_r19.md). Both
+      // spellings are law-pinned to the same truth (`Scd2LiveSpec`), so
+      // dispatch changes cost, never rows.
       scd2LookupOn(ev)
     else
       // a landed multi-month base exists: serve the freshness

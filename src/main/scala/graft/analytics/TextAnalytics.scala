@@ -502,22 +502,6 @@ object TextAnalytics {
             / element_at(col("u"), col("ku")).cast("double")))
       .withColumn("rho", col("n_both").cast("double") / col("ku").cast("double"))
 
-  /** Sketch-only serving shape (no exact audit): what production reads —
-    * one pass to the per-source sketches, then corpus-independent pair
-    * algebra. The ScaleProbe rows price the audit against this.
-    */
-  private[graft] def kmvOverlapSketchOn(docs: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
-    val sk = kmvShingles(docs).select(col("source"), hash60(col("g")).as("h"))
-      .groupBy("source").agg(expr(s"kmin_distinct(h, $KmvK)").as("mins"))
-    kmvPairEst(sk)
-      .select(col("s1"), col("s2"),
-        round(col("rho") * col("est_u"), 4).as("est_inter"),
-        round(col("est_u"), 4).as("est_union"),
-        round(col("rho"), 6).as("jacc_est"))
-      .orderBy("s1", "s2")
-  }
-
   private[graft] def kmvOverlapOn(docs: DataFrame): DataFrame = {
     graft.GraftExtensions.register(docs.sparkSession)
     val sh = kmvShingles(docs)

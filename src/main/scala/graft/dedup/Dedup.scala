@@ -262,12 +262,6 @@ object Dedup {
       .distinct()
   }
 
-  /** [[prefixCandidates]] straight off raw (un-hashed) shingle sets —
-    * probe/diagnostic entry.
-    */
-  private[graft] def prefixCandidatesOn(rawSets: DataFrame): DataFrame =
-    prefixCandidates(hashedSets(rawSets).repartition(col("doc_id")))
-
   // ---- dedup_jaccard_char: the char-n-gram flavor, same machinery ------
   def dedupJaccardChar(spark: SparkSession, dir: String): DataFrame =
     dedupJaccardOn(charShingleSets(spark, dir))
@@ -342,14 +336,6 @@ object Dedup {
       .select(col("doc_id"), xxhash64(col("term")).as("th"), col("c"))
       .repartition(col("doc_id"))
       .localCheckpoint(eager = false)
-
-  /** Prefix-filtered candidate pairs (probe/diagnostic entry — prices
-    * the L2 suffix-mass filter's pruning against the all-pairs count).
-    */
-  private[graft] def cosineCandidatesOn(docs: DataFrame): DataFrame = {
-    val tc = cosinePostings(docs)
-    cosineCandidates(tc, tc.groupBy(col("doc_id")).agg(sum(col("c") * col("c")).as("na2")))
-  }
 
   private def cosineCandidates(tc: DataFrame, n2: DataFrame): DataFrame = {
     val dfT = tc.groupBy(col("th")).agg(count(lit(1)).as("df"))
@@ -1722,15 +1708,6 @@ object Dedup {
         graft.analytics.RetrievalAnalytics.storeKey(dir),
         Tables.documents(spark, dir)))
 
-  /** @param semanticOf the semantic screen over the normed embedding
-    *   frame. The registry default is the oracle-checked modulo-seeded
-    *   `dedupSemanticOn` — whose K grows with N (fine for the oracle
-    *   gate, quadratic at corpus scale, the documented `dedup_semantic`
-    *   caveat); production passes a FIXED or trained centroid set via
-    *   `dedupSemanticWith`, which is exactly what the ScaleProbe arm
-    *   measures (the 100× residual before this parameter existed was the
-    *   modulo rule's 800M-row assignment, not the composition).
-    */
   /** @param lexPairsOf the lexical screen's verified pair stream over the
     *   docs frame. Default: the in-plan AllPairs pipeline
     *   ([[dedupJaccardOn]]); the served twin passes the persisted edge
@@ -1738,8 +1715,6 @@ object Dedup {
     *   against `jaccardOracleSql`), so the ensemble oracle is shared.
     */
   private[graft] def dedupEnsembleOn(docs: DataFrame, emb: DataFrame,
-      semanticOf: DataFrame => DataFrame =
-        graft.similarity.Similarity.dedupSemanticOn,
       lexPairsOf: DataFrame => DataFrame =
         d => dedupJaccardOn(shingleSets(d))): DataFrame = {
     val d = docs.select(col("doc_id"), md5(col("text")).as("fp"))
@@ -1752,7 +1727,8 @@ object Dedup {
     val lex = lexPairsOf(docs)
       .select(col("doc_id_2").as("doc_id")).distinct()
       .withColumn("lx", lit(1))
-    val sem = semanticOf(graft.similarity.Similarity.withNorms(emb))
+    val sem = graft.similarity.Similarity.dedupSemanticOn(
+      graft.similarity.Similarity.withNorms(emb))
       .select(col("vec_id").as("doc_id"),
         (lit(1) - col("keep")).cast("int").as("semantic_dup"))
     exact

@@ -963,7 +963,7 @@ object Linkage {
       // keys-then-edges, so a build killed mid-edges leaves the table but
       // no `_SUCCESS`; a bare directory-exists check would then serve a
       // partial pair graph to every *_served consumer forever (the
-      // stale-cache class the bigEvents probe cache documents).
+      // stale-cache class).
       val built = spark.catalog.tableExists(s.keysTable) &&
         graft.sources.StoreCatalog.committed(spark, s.edgesPath)
       if (!built) {
@@ -1168,8 +1168,8 @@ object Linkage {
     */
   private def linkIncStores(spark: SparkSession, key: String,
       names: => DataFrame, idCol: String, nameCol: String): String = {
-    val n = names
-    // VERSIONED root (the bigEvents cache lesson): this root first
+    // VERSIONED root (a marker cannot tell an old artifact set from
+    // the current one, the ScaleProbe.scaledDir rule): this root first
     // shipped with entities only; adding the coreness chain changed the
     // artifact set (_v2), r16 added the landed tombstone batch (_v3),
     // and r17 renumbered that batch to 3 and added the triangle chain
@@ -1177,34 +1177,46 @@ object Linkage {
     // missing the newer artifacts forever. Bump on shape change.
     val base = graft.sources.StoreCatalog.root("graft_link_ingest",
       key + "_v4")
-    val store = graft.streaming.LinkIngest.LinkStores(
-      base + "/keys", base + "/edges")
     buildLock.synchronized {
       graft.sources.StoreCatalog.ensureBuilt(spark, base) {
-        (0 to 2).foreach { r =>
-          graft.streaming.LinkIngest.processBatch(
-            n.filter(col(idCol) % 3 === r), r.toLong, store, idCol, nameCol)
-          graft.streaming.LinkIngest.updateEntities(
-            spark, store, base + "/entities", r.toLong)
-          foldCorenessSnapshot(spark, store, base + "/entities",
-            base + "/coreness", r.toLong)
-          foldTrianglesSnapshot(spark, store, base + "/triangles", r.toLong)
-        }
-        // the registry takedown batch lands beside the chains — the
-        // read-side compose entry's deletion store. Numbered 3 — AFTER
-        // the last insert batch (0..2) — because the takedown logically
-        // post-dates it and processTombstones' contract says insert and
-        // delete batches share one replay/as-of numbering (r16 ADVICE:
-        // landing it as 0 made any future as-of read mis-order the
-        // delete; today's read composes all tombstone partitions
-        // unconditionally, so behavior is unchanged).
-        graft.streaming.DedupEdgeIngest.processTombstones(
-          n.filter(col(idCol) % DelMod === DelRes)
-            .select(col(idCol).cast("long").as("dead_id")),
-          3L, base + "/tombs")
+        landIncChains(spark, base, names, idCol, nameCol)
       }
     }
     base
+  }
+
+  /** The body of every incremental linkage-ingest root build, written
+    * once: the three insert batches land and fold the entity, coreness
+    * and triangle chains, then the registry takedown batch lands beside
+    * them. Returns the root's record stores.
+    */
+  private def landIncChains(spark: SparkSession, base: String,
+      names: DataFrame, idCol: String, nameCol: String)
+      : graft.streaming.LinkIngest.LinkStores = {
+    val store = graft.streaming.LinkIngest.LinkStores(
+      base + "/keys", base + "/edges")
+    (0 to 2).foreach { r =>
+      graft.streaming.LinkIngest.processBatch(
+        names.filter(col(idCol) % 3 === r), r.toLong, store, idCol, nameCol)
+      graft.streaming.LinkIngest.updateEntities(
+        spark, store, base + "/entities", r.toLong)
+      foldCorenessSnapshot(spark, store, base + "/entities",
+        base + "/coreness", r.toLong)
+      foldTrianglesSnapshot(spark, store, base + "/triangles", r.toLong)
+    }
+    // the registry takedown batch lands beside the chains — the
+    // read-side compose entry's deletion store. Numbered 3 — AFTER
+    // the last insert batch (0..2) — because the takedown logically
+    // post-dates it and processTombstones' contract says insert and
+    // delete batches share one replay/as-of numbering (r16 ADVICE:
+    // landing it as 0 made any future as-of read mis-order the
+    // delete; today's read composes all tombstone partitions
+    // unconditionally, so behavior is unchanged).
+    graft.streaming.DedupEdgeIngest.processTombstones(
+      names.filter(col(idCol) % DelMod === DelRes)
+        .select(col(idCol).cast("long").as("dead_id")),
+      3L, base + "/tombs")
+    store
   }
 
   /** The COMPACTED incremental linkage-ingest root — the r19
@@ -1228,26 +1240,11 @@ object Linkage {
     */
   private def linkIncCompactedStores(spark: SparkSession, key: String,
       names: => DataFrame, idCol: String, nameCol: String): String = {
-    val n = names
     val base = graft.sources.StoreCatalog.root("graft_link_ingest",
       key + "_cpt_v1")
-    val store = graft.streaming.LinkIngest.LinkStores(
-      base + "/keys", base + "/edges")
     buildLock.synchronized {
       graft.sources.StoreCatalog.ensureBuilt(spark, base) {
-        (0 to 2).foreach { r =>
-          graft.streaming.LinkIngest.processBatch(
-            n.filter(col(idCol) % 3 === r), r.toLong, store, idCol, nameCol)
-          graft.streaming.LinkIngest.updateEntities(
-            spark, store, base + "/entities", r.toLong)
-          foldCorenessSnapshot(spark, store, base + "/entities",
-            base + "/coreness", r.toLong)
-          foldTrianglesSnapshot(spark, store, base + "/triangles", r.toLong)
-        }
-        graft.streaming.DedupEdgeIngest.processTombstones(
-          n.filter(col(idCol) % DelMod === DelRes)
-            .select(col(idCol).cast("long").as("dead_id")),
-          3L, base + "/tombs")
+        val store = landIncChains(spark, base, names, idCol, nameCol)
         graft.streaming.LinkIngest.compact(spark, store,
           tombsPath = Some(base + "/tombs"),
           entitiesChain = Some(base + "/entities"),
@@ -1410,34 +1407,6 @@ object Linkage {
     val out = p.getFileSystem(spark.sessionState.newHadoopConf()).create(p, true)
     out.write(n.toString.getBytes("UTF-8"))
     out.close()
-  }
-
-  /** The FORCED-local fold spelling — [[foldCorenessSnapshot]] with the
-    * batch-fraction dispatch bypassed, so the crossover sweep
-    * (`link_coreness_fold_f*` probe arms, r17 verdict #5) can price the
-    * local machinery at batch fractions ABOVE
-    * [[LocalFoldMaxBatchFraction]], where production would dispatch to
-    * the component recompute. Probe-only: production folds go through
-    * the dispatching entry (this twin skips the edge-count manifest —
-    * a probe chain doesn't carry one).
-    */
-  private[graft] def foldCorenessSnapshotLocal(spark: SparkSession,
-      store: graft.streaming.LinkIngest.LinkStores,
-      entPath: String, corPath: String, id: Long): Unit = {
-    val newEdges = spark.read.parquet(s"${store.edgesPath}/batch_id=$id")
-      .select(col("a_id"), col("b_id"))
-      .localCheckpoint(eager = false)
-    val snapshot =
-      if (id == 0) graphCorenessCappedCountingOn(newEdges)
-      else maintainCorenessLocalIns(
-        spark.read.parquet(s"$corPath/batch_id=${id - 1}"),
-        spark.read.parquet(s"$entPath/batch_id=${id - 1}")
-          .select("doc_id", "component_id"),
-        graft.Maintenance.readAsOf(spark, store.edgesPath, id)
-          .select(col("a_id"), col("b_id"))
-          .localCheckpoint(eager = false),
-        newEdges)
-    snapshot.write.mode("overwrite").parquet(s"$corPath/batch_id=$id")
   }
 
   /** The r15–r16 fold spelling — affected-COMPONENT recompute via the

@@ -116,7 +116,7 @@ object LabelEval {
 
   /** ONE plan, not K (round 11 — the [[MmrSelect]] fusion applied to
     * the same k-chained shape): the pool is hard-capped at [[MaxPool]]
-    * candidates (the `% poolMod` sample alone is a corpus fraction), so
+    * candidates (the `% PoolMod` sample alone is a corpus fraction), so
     * the whole Gonzalez walk runs inside a single
     * `aggregate(sequence(1, K), …)` higher-order expression over one
     * collect_list row, carrying the selected set as an accumulated
@@ -129,9 +129,8 @@ object LabelEval {
     * exchanges; `slice(array_sort(…), 1, 1)` keeps pool exhaustion
     * empty-safe.
     */
-  private[graft] def kcenterSelectOn(emb: DataFrame,
-                                     poolMod: Long = PoolMod): DataFrame = {
-    val pool = quantized(emb).filter(col("vec_id") % poolMod === 0)
+  private[graft] def kcenterSelectOn(emb: DataFrame): DataFrame = {
+    val pool = quantized(emb).filter(col("vec_id") % PoolMod === 0)
       .orderBy("vec_id").limit(MaxPool.toInt)
       .agg(collect_list(struct(col("vec_id"), col("qv"))).as("cands"))
     val sqd = "aggregate(zip_with(%s, %s, (x, y) -> (x - y) * (x - y)), 0L, (a, b) -> a + b)"

@@ -495,7 +495,7 @@ object PqAnn {
     * ([[Similarity.sqrtCentroids]]): same ADC scan, but the coarse
     * assignment stream is N·C = N^1.5 instead of the modular rule's
     * N²/50 — the composition that actually survives a 100× corpus
-    * (ScaleProbe measures the cut directly).
+    * (PLANS.md's 100× probe measured the cut directly).
     */
   def knnIvfPqSqrt(spark: SparkSession, dir: String): DataFrame =
     knnIvfPqOn(Tables.embeddings(spark, dir),
@@ -521,7 +521,7 @@ object PqAnn {
     // its routed member stream this way): |members| = |Q|·nprobe·(N/C).
     // That is broadcastable ONLY under a bounded query batch — the
     // production regime, where Q is a fixed per-request batch (the
-    // served tiers pin exactly this; ScaleProbe pins queries to the
+    // served tiers pin exactly this; RecallProbe pins queries to the
     // base id range for the same reason). The registry's QueryMod rule
     // makes Q a corpus FRACTION, so at some corpus size the oracle-gate
     // spelling would hit the broadcast ceiling — at that point swap

@@ -174,7 +174,7 @@ object Similarity {
     * rule lands m=32 ⇒ C=16 (vs knn_ivf's 10), so the two operators are
     * deliberately comparable at test scale while diverging at 100×
     * (C=391 modular vs C≈N/512 sqrt — a 10× cut of the assignment
-    * stream, measured in ScaleProbe).
+    * stream, measured at 100×; PLANS.md).
     *
     * Recall honesty (round-9 finding, [[graft.tools.IvfArtifactProbe]]):
     * this variant measures 0.335 recall@10 at sf0.1 vs `knn_ivf`'s
@@ -1071,19 +1071,12 @@ object Similarity {
     * baseline, banded in production) is the dominant term of every graph
     * consumer; edges are sparse, so the store is the cheap artifact.
     */
-  /** @param pairsOf the verified pair stream to persist. Default: the
-    *   exact oracle-verifiable scan ([[dedupEmbeddingOn]], quadratic —
-    *   paid once at build); production and the ScaleProbe arm pass the
-    *   banded / sharded linear source — same pluggability as
-    *   [[docPagerankFrom]], now at the STORE boundary.
-    */
   private[graft] def storedEmbPairs(spark: SparkSession, key: String,
-      e: => DataFrame,
-      pairsOf: DataFrame => DataFrame = dedupEmbeddingOn): DataFrame = {
+      e: => DataFrame): DataFrame = {
     val path = graft.sources.StoreCatalog.root("graft_emb_edges", key)
     prStoreLock.synchronized {
       graft.sources.StoreCatalog.ensureCommitted(spark, Seq(path)) {
-        pairsOf(e).write
+        dedupEmbeddingOn(e).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       }
     }

@@ -14,8 +14,7 @@ import org.apache.spark.sql.SparkSession
   * the Hadoop FS API, because the warehouse/tmp need not be local (the
   * r13 linkStores lesson, now applied uniformly — the served hybrid
   * store's bare directory-exists checks were the remaining instances
-  * of the stale-partial-cache class the bigEvents probe cache
-  * documents).
+  * of the stale-partial-cache class).
   */
 object StoreCatalog {
 

@@ -151,7 +151,7 @@ object LinkIngest {
     * the survivor-composed read is IDENTICAL before and after by
     * construction, and a read between compactions pays only the
     * takedowns landed SINCE (`LinkIngestSpec`'s compaction laws,
-    * `ScaleProbe`'s `link_incdel_read_*` arms). The tombstone store
+    * PLANS.md's `link_incdel_read_*` probe rows). The tombstone store
     * itself folds to an EMPTY consolidated generation with the fold
     * horizon advanced, so a replayed takedown at or below the horizon
     * fails loud. The applied set is PINNED by generation id before any

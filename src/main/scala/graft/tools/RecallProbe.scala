@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   *
   * Usage: `runMain graft.tools.RecallProbe [scales] [sfDir] [tmpDir]` —
   * scales a comma list (default `1,10`); scale 1 reads sfDir's
-  * embeddings directly, larger scales read/synthesize the ScaleProbe
-  * replica corpus (cross-replica structure dissolved, queries PINNED to
-  * the base id range — the fixed-eval-suite model).
+  * embeddings directly, scale N reads the embeddings of
+  * [[graft.ScaleProbe.scaledDir]]`(sfDir, N, tmpDir)` — the same replica
+  * root `tools.Probe` times keys on (cross-replica structure dissolved,
+  * queries PINNED to the base id range — the fixed-eval-suite model).
   */
 object RecallProbe {
 
@@ -100,17 +101,8 @@ object RecallProbe {
           col("vec_id") % 100 === 0)
         else if (copies == 1) (Tables.embeddings(spark, sfDir),
           col("vec_id") % 100 === 0)
-        else {
-          val embPath = s"$tmp/emb_$copies"
-          val fs = new org.apache.hadoop.fs.Path(embPath)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          if (!fs.exists(new org.apache.hadoop.fs.Path(s"$embPath/_SUCCESS")))
-            ScaleProbe.bigEmb(Tables.embeddings(spark, sfDir), copies)
-              .repartition(spark.sparkContext.defaultParallelism)
-              .write.mode("overwrite").parquet(embPath)
-          (spark.read.parquet(embPath),
-            col("vec_id") % 100 === 0 && col("vec_id") < 10000000L)
-        }
+        else (Tables.embeddings(spark, ScaleProbe.scaledDir(spark, sfDir, copies, tmp)),
+          col("vec_id") % 100 === 0 && col("vec_id") < 10000000L)
       // SEED-DISJOINT query set (the IvfArtifactProbe measurement law):
       // id ≡ 10 (mod 100) never satisfies the kmeans seed rule
       // (id % 25 == 0), so no query contributed to centroid seeding —
